@@ -26,11 +26,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def build_curated_chunks(spark, input_dir, chunk_tokens=2048, overlap=64,
                          min_tokens=10, sample_rate=None):
-    """The job's full lazy plan (extract -> exact-dedup -> quality gate ->
-    optional deterministic sample -> overlapping chunks) as a DataFrame,
-    shared by the CLI main() and the driver-verified
-    `pipeline_curate_end2end` query so the composed path that ships under
-    spark-submit is the exact path the correctness harness re-proves."""
+    """The job's full lazy plan (extract -> exact-dedup -> optional
+    deterministic sample -> min-token gate + overlapping chunks) as a
+    DataFrame, shared by the CLI main() and the driver-verified
+    `pipeline_curate_end2end` / `pipeline_extract_dedup_chunk` queries so
+    the composed path that ships under spark-submit is the exact path the
+    correctness harness re-proves. The gate runs inside the chunker over
+    its single token projection (sampling by url and gating by token count
+    commute, so the order between them does not change the output)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -60,15 +63,11 @@ def build_curated_chunks(spark, input_dir, chunk_tokens=2048, overlap=64,
         .where(F.col("_rn") == 1)
         .drop("_rn", "fingerprint")
     )
-    quality = deduped.where(
-        F.size(F.filter(F.split("text", r"\s+"), lambda x: x != ""))
-        >= min_tokens
-    )
     if sample_rate is not None:
-        quality = deterministic_sample(quality, key_col="url", rate=sample_rate)
+        deduped = deterministic_sample(deduped, key_col="url", rate=sample_rate)
     return chunk_documents(
-        quality, text_col="text", id_col="url",
-        chunk_tokens=chunk_tokens, overlap=overlap,
+        deduped, text_col="text", id_col="url",
+        chunk_tokens=chunk_tokens, overlap=overlap, min_tokens=min_tokens,
     )
 
 

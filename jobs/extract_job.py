@@ -49,10 +49,7 @@ def main(argv=None) -> int:
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("pdf-parser-spark-extract").getOrCreate()
-    from pdf_parser_spark.pipeline import (
-        extract_pipeline, lineage_rows, load_pages, resume_against,
-        with_metrics, write_output,
-    )
+    from pdf_parser_spark.pipeline import lineage_rows, load_pages, run_job
     from pdf_parser_spark.sources import read_binary_files, read_warc
 
     if args.source == "warc":
@@ -62,20 +59,10 @@ def main(argv=None) -> int:
     else:
         pages = load_pages(spark, args.input)
 
-    if args.resume:
-        try:
-            committed = spark.read.parquet(args.output)
-            pages = resume_against(pages, committed)
-        except Exception:
-            pass  # first run: nothing committed yet
-
-    result, obs = with_metrics(
-        extract_pipeline(
-            pages, method=args.method,
-            repartition_partitions=args.repartition,
-        )
+    _, obs = run_job(
+        pages, args.output, method=args.method, resume=args.resume,
+        repartition_partitions=args.repartition,
     )
-    write_output(result, args.output)
     print(f"metrics: {obs.get}", file=sys.stderr)
 
     if args.lineage_output:

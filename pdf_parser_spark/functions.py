@@ -4,10 +4,14 @@ reference's importable API).
 
     from pdf_parser_spark.functions import register_all
     register_all(spark)
-    spark.sql("SELECT url, pp_extract_text(html) AS text FROM pages")
+    spark.sql("SELECT url, pp_extract_text(url, html) AS text FROM pages")
 
 All functions are Arrow-batched pandas UDFs over the same kernels the
-pipeline uses, so SQL results are byte-identical to pipeline results.
+pipeline uses. `pp_extract_text(url, html)` calls the pipeline's own
+`route_document`, so SQL validates and routes exactly like the kernel
+(the url picks the .pdf route and names the file in validation errors)
+and its text is byte-identical; it returns NULL where the pipeline would
+emit an error row.
 """
 
 from __future__ import annotations
@@ -20,37 +24,19 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .kernels.fields import canonical_json, extract_fields
-from .kernels.htmlmain import html_to_text
-from .kernels.pdftext import PDFProcessingError, extract_text
-from .kernels.validate import is_pdf_bytes, validate_pdf_document, validate_size
+from .pipeline import route_document
 
 __all__ = ["register_all"]
-
-
-def _extract_one_text(payload) -> str | None:
-    if payload is None:
-        return None
-    b = bytes(payload)
-    try:
-        if is_pdf_bytes(b):
-            if validate_pdf_document(b, "doc.pdf"):
-                return None
-            return extract_text(b)
-        if validate_size(b, "doc.html"):
-            return None
-        return html_to_text(b)
-    except PDFProcessingError:
-        return None
-    except Exception:
-        return None
 
 
 def register_all(spark: SparkSession, prefix: str = "pp_") -> None:
     """Register every kernel as `<prefix><name>` (idempotent)."""
 
     @F.pandas_udf("string")
-    def _text_udf(payloads):
-        return pd.Series([_extract_one_text(p) for p in payloads])
+    def _text_udf(urls, payloads):
+        return pd.Series([
+            route_document(u, p, None)[0] for u, p in zip(urls, payloads)
+        ])
 
     @F.pandas_udf("string")
     def _fields_udf(texts):

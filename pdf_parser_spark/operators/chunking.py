@@ -26,28 +26,40 @@ def chunk_documents(
     id_col: str = "doc_id",
     chunk_tokens: int = 64,
     overlap: int = 8,
+    min_tokens: int = 0,
 ) -> DataFrame:
     """Split each document into overlapping whitespace-token chunks.
 
     Chunk k starts at token offset k*(chunk_tokens-overlap) and takes
-    chunk_tokens tokens; the tail chunk is shorter. split -> sequence ->
-    slice -> posexplode, all codegen'd; the fan-out is bounded by
-    n_tokens/stride per row, so skew follows document length, which the F1
-    size cap already bounds. Returns (id, chunk_idx, chunk_text, n_tokens).
+    chunk_tokens tokens; the tail chunk is shorter. A document with fewer
+    than `min_tokens` tokens yields no chunks. split -> sequence -> slice ->
+    posexplode, all codegen'd; the fan-out is bounded by n_tokens/stride
+    per row, so skew follows document length, which the F1 size cap
+    already bounds. Returns (id, chunk_idx, chunk_text, n_tokens).
+
+    The tokens are projected once and both the gate and the chunker read
+    that column: a split inside the transform lambda is re-evaluated for
+    every chunk (quadratic in document length), and a separate
+    `where(size(split(..)))` gate gets the split inlined by Catalyst's
+    predicate pushdown, tokenizing the text twice.
     """
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
     step = chunk_tokens - overlap
-    tokens = F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
+    tokens = F.col("_tokens")
     starts = F.sequence(
         F.lit(1), F.greatest(F.size(tokens) - overlap, F.lit(1)), F.lit(step)
     )
+    if min_tokens:
+        starts = F.when(F.size(tokens) >= min_tokens, starts)
     chunks = F.transform(starts, lambda s: F.slice(tokens, s, chunk_tokens))
     return (
         df.select(
             F.col(id_col),
-            F.posexplode(chunks).alias("chunk_idx", "_chunk"),
+            F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
+            .alias("_tokens"),
         )
+        .select(id_col, F.posexplode(chunks).alias("chunk_idx", "_chunk"))
         .select(
             id_col,
             "chunk_idx",

@@ -24,7 +24,8 @@ Design notes for 100 TB scale:
     few huge files) where scan splits can't balance.
   * The kernel short-circuits invalid rows before any expensive parsing
     (reference fail-fast order: size -> magic -> extension ->
-    parse -> fields; validators.py:37-39, pdf_processor.py:63-67).
+    parse -> fields; validators.py:37-39, pdf_processor.py:63-67). That
+    order lives in `route_document` alone; the SQL surface calls it too.
   * Per-row error isolation: a bad document yields a status='error' row,
     never a task failure (batch_processor.py:84-88 semantics).
   * The kernel is a pure function of (url, html, text) bytes, so task retries
@@ -38,6 +39,7 @@ import os
 from typing import Callable, Dict, Iterator, List, Optional, Tuple
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -54,7 +56,8 @@ from .kernels.pdftext import PDFProcessingError, extract_text
 
 __all__ = [
     "OUTPUT_SCHEMA", "load_pages", "extract_pipeline", "extract_kernel",
-    "write_output", "resume_against", "with_metrics", "run_job",
+    "write_output", "resume_against", "resume_from", "with_metrics",
+    "route_document", "run_job",
 ]
 
 MEGA_THRESHOLD = 1 * 1024 * 1024  # docs above 1 MB get spread round-robin
@@ -91,49 +94,56 @@ def load_pages(spark: SparkSession, corpus_dir: str) -> DataFrame:
 # The kernel: Arrow-batched, pure, error-isolated
 # --------------------------------------------------------------------------
 
+def route_document(
+    url: Optional[str], html: Optional[bytes], text_in: Optional[str]
+) -> Tuple[Optional[str], List[Tuple[str, int, int]], Optional[str]]:
+    """The one document-routing function: validate, then extract text.
+
+    Returns (text, spans, error); error is None on success. Routing:
+    pre-extracted text -> text branch; %PDF magic or .pdf url -> PDF branch
+    (full reference chain size -> magic -> extension -> parse); anything
+    else with bytes -> HTML branch (size band + boilerplate strip). Never
+    raises: a bad document becomes an error string.
+    """
+    if url is None:
+        return None, [], "missing url"
+    if text_in:
+        return text_in, [], None
+    if not html:
+        return None, [], "empty document"
+    name = url.rsplit("/", 1)[-1] or url
+    try:
+        if V.is_pdf_bytes(html) or V.is_pdf_url(url):
+            err = V.validate_pdf_document(html, name)
+            return (None, [], err) if err else (extract_text(html), [], None)
+        err = V.validate_size(html, name)
+        if err:
+            return None, [], err
+        text, block_spans = extract_main_content(html)
+        return text, [(f"block:{tag}", s, e) for tag, s, e in block_spans], None
+    except PDFProcessingError as e:
+        return None, [], str(e)
+    except Exception as e:  # never let one document kill the task
+        return None, [], f"extraction error: {e}"
+
+
 def _extract_one(
-    url: str,
+    url: Optional[str],
     html: Optional[bytes],
     text_in: Optional[str],
     method: str,
     model: Callable[[str], str],
 ) -> Tuple[Optional[str], Optional[str], List[Tuple[str, int, int]],
            Optional[str], str, Optional[str]]:
-    """Per-document routing + extraction.
+    """`route_document` plus the content hash and field extraction.
 
     Returns (file_hash, text, spans, fields_json, status, error).
-    Routing: pre-extracted text -> text branch; %PDF magic or .pdf url ->
-    PDF branch (full reference validation chain); anything else with bytes ->
-    HTML branch (size band + boilerplate strip).
     """
-    html = html or b""
-    name = url.rsplit("/", 1)[-1] or url
-    payload = html if html else (text_in or "").encode("utf-8")
+    payload = html or (text_in or "").encode("utf-8")
     file_hash = hashlib.sha256(payload).hexdigest()[:6] if payload else None
-
-    # route
-    text: Optional[str] = None
-    spans: List[Tuple[str, int, int]] = []
-    try:
-        if text_in:
-            text = text_in
-        elif not html:
-            return file_hash, None, [], None, "error", "empty document"
-        elif V.is_pdf_bytes(html) or V.is_pdf_url(url):
-            err = V.validate_pdf_document(html, name)
-            if err:
-                return file_hash, None, [], None, "error", err
-            text = extract_text(html)
-        else:
-            err = V.validate_size(html, name)
-            if err:
-                return file_hash, None, [], None, "error", err
-            text, block_spans = extract_main_content(html)
-            spans.extend((f"block:{tag}", s, e) for tag, s, e in block_spans)
-    except PDFProcessingError as e:
-        return file_hash, None, [], None, "error", str(e)
-    except Exception as e:  # never let one document kill the task
-        return file_hash, None, [], None, "error", f"extraction error: {e}"
+    text, spans, err = route_document(url, html, text_in)
+    if err is not None:
+        return file_hash, None, [], None, "error", err
 
     try:
         if method == "ai":
@@ -189,18 +199,17 @@ def extract_kernel(
 # Plan assembly
 # --------------------------------------------------------------------------
 
-def _size_aware_repartition(
-    pages: DataFrame, num_partitions: int, mega_threshold: int
-) -> DataFrame:
+def _size_aware_repartition(pages: DataFrame, num_partitions: int) -> DataFrame:
     """One explicit shuffle with skew handling.
 
-    Small docs hash-partition by url (deterministic co-location); mega docs
-    are spread round-robin so no partition owns two 50 MB rows. Disjoint
-    row sets, so the union stays a single logical shuffle stage.
+    Small docs hash-partition by url (deterministic co-location); docs over
+    MEGA_THRESHOLD are spread round-robin so no partition owns two 50 MB
+    rows. Disjoint row sets, so the union stays a single logical shuffle
+    stage.
     """
     # coalesce: length(NULL) is NULL, which would drop NULL-html rows from
     # BOTH filter branches — they must surface as error rows, never vanish
-    is_mega = F.coalesce(F.length(F.col("html")), F.lit(0)) > F.lit(mega_threshold)
+    is_mega = F.coalesce(F.length(F.col("html")), F.lit(0)) > F.lit(MEGA_THRESHOLD)
     small = pages.where(~is_mega).repartition(num_partitions, F.xxhash64("url"))
     big = pages.where(is_mega).repartition(max(4, num_partitions // 2))
     return small.unionByName(big)
@@ -209,8 +218,6 @@ def _size_aware_repartition(
 def extract_pipeline(
     pages: DataFrame,
     method: str = "classic",
-    num_partitions: Optional[int] = None,
-    mega_threshold: int = MEGA_THRESHOLD,
     model: Callable[[str], str] = stub_model,
     repartition_partitions: Optional[int] = None,
 ) -> DataFrame:
@@ -218,13 +225,13 @@ def extract_pipeline(
 
     Default is shuffle-free: the scan's splits (maxPartitionBytes) balance
     the work and the kernel maps over them directly. Pass
-    `repartition_partitions` (or legacy `num_partitions`) to force the
-    explicit url-hash + mega-doc-spread exchange for unsplittable sources.
+    `repartition_partitions` to force the explicit url-hash + mega-doc-spread
+    exchange for unsplittable sources. Works on batch and streaming pages.
     """
     src = pages.select("url", "warc_ts", "html", "text", "lang")
-    parts = repartition_partitions or num_partitions
-    routed = _size_aware_repartition(src, parts, mega_threshold) if parts else src
-    extracted = routed.mapInPandas(extract_kernel(method, model), OUTPUT_SCHEMA)
+    if repartition_partitions:
+        src = _size_aware_repartition(src, repartition_partitions)
+    extracted = src.mapInPandas(extract_kernel(method, model), OUTPUT_SCHEMA)
     return extracted.withColumn("extracted_at", F.current_timestamp())
 
 
@@ -261,6 +268,28 @@ def resume_against(pages: DataFrame, committed_urls: DataFrame) -> DataFrame:
     return pages.join(committed_urls.select("url"), on="url", how="left_anti")
 
 
+# how Spark reports "nothing committed yet": a missing path, or a directory
+# with no data files to infer a schema from
+_NOTHING_COMMITTED = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def resume_from(pages: DataFrame, out_path: str) -> DataFrame:
+    """The one resume path: anti-join `pages` against the output committed
+    at `out_path`, or return them unchanged when nothing is committed yet.
+
+    Any other failure to read the committed output (a corrupt part file,
+    a permission error) raises: reprocessing everything would append a
+    duplicate of every committed url.
+    """
+    try:
+        committed = pages.sparkSession.read.parquet(out_path)
+    except AnalysisException as e:
+        if e.getCondition() in _NOTHING_COMMITTED:
+            return pages
+        raise
+    return resume_against(pages, committed)
+
+
 def write_output(
     df: DataFrame,
     path: str,
@@ -275,21 +304,18 @@ def write_output(
 
 
 def run_job(
-    spark: SparkSession,
-    corpus_dir: str,
+    pages: DataFrame,
     out_path: Optional[str] = None,
     method: str = "classic",
     resume: bool = True,
+    repartition_partitions: Optional[int] = None,
 ) -> Tuple[DataFrame, Observation]:
     """End-to-end job with idempotent resume. Returns (result_df, observation)."""
-    pages = load_pages(spark, corpus_dir)
-    if resume and out_path and os.path.isdir(out_path):
-        try:
-            committed = spark.read.parquet(out_path)
-            pages = resume_against(pages, committed)
-        except Exception:
-            pass  # no committed snapshot yet
-    result, obs = with_metrics(extract_pipeline(pages, method=method))
+    if resume and out_path:
+        pages = resume_from(pages, out_path)
+    result, obs = with_metrics(extract_pipeline(
+        pages, method=method, repartition_partitions=repartition_partitions,
+    ))
     if out_path:
         write_output(result, out_path)
     return result, obs

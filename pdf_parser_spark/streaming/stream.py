@@ -3,9 +3,9 @@
 The reference is a bounded interactive app (SURVEY.md §2.9) and the batch
 job's resume story is snapshot-based; this module is the incremental-feed
 variant the north star anticipates ("if the corpus were fed incrementally").
-The SAME kernel runs unchanged: mapInPandas is stateless, so the streaming
-plan is identical to the batch plan with a file (or Iceberg/Kafka) stream
-source in front.
+The SAME plan runs unchanged: `extract_pipeline` is a stateless
+mapInPandas, so the streaming plan is the batch plan with a file (or
+Iceberg/Kafka) stream source in front.
 
 Semantics at scale:
   * exactly-once via the checkpoint: file-source offsets + sink commit log
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..pipeline import OUTPUT_SCHEMA, extract_kernel
+from ..pipeline import extract_pipeline
 
 # schema of the pages table (a streaming source cannot infer it)
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -54,11 +54,8 @@ def stream_extract(
     Returns the started query; callers awaitTermination() (AvailableNow
     stops by itself once the backlog drains).
     """
-    pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
-    extracted = (
-        pages.select("url", "warc_ts", "html", "text", "lang")
-        .mapInPandas(extract_kernel(method), OUTPUT_SCHEMA)
-        .withColumn("extracted_at", F.current_timestamp())
+    extracted = extract_pipeline(
+        _pages_stream(spark, corpus_dir, max_files_per_trigger), method=method
     )
     writer = (
         extracted.writeStream.format("parquet")
@@ -166,10 +163,8 @@ def stream_status_counts(
     emits the updated running totals; the latest row per (window, status)
     is the current count. In-memory sink named 'status_counts'.
     """
-    pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
-    extracted = (
-        pages.select("url", "warc_ts", "html", "text", "lang")
-        .mapInPandas(extract_kernel(), OUTPUT_SCHEMA)
+    extracted = extract_pipeline(
+        _pages_stream(spark, corpus_dir, max_files_per_trigger)
     )
     counts = (
         extracted.withWatermark("warc_ts", watermark)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -52,6 +54,56 @@ class TestChunkDocuments:
         df = spark.createDataFrame([(0, "a b")], "doc_id bigint, text string")
         with pytest.raises(ValueError):
             chunk_documents(df, chunk_tokens=4, overlap=4)
+
+
+def _ref_chunks(text, chunk_tokens, overlap):
+    """Plain-Python chunker: Java's \\s is ASCII-only, so split on exactly
+    that set (Python's \\s would also split on NBSP)."""
+    toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text) if t]
+    starts = range(0, max(len(toks) - overlap, 1), chunk_tokens - overlap)
+    return [" ".join(toks[s:s + chunk_tokens]) for s in starts]
+
+
+class TestTokenProjection:
+    def test_min_tokens_gate(self, spark):
+        df = spark.createDataFrame(
+            [(0, "a b c"), (1, "a b c d e"), (2, "")], "doc_id bigint, text string"
+        )
+        ids = lambda m: sorted(  # noqa: E731
+            r.doc_id for r in chunk_documents(df, min_tokens=m).collect()
+        )
+        assert ids(0) == [0, 1, 2]
+        assert ids(4) == [1]
+
+    def test_long_multi_chunk_document(self, spark):
+        text = "\n".join(" ".join(f"t{i}x{j}" for j in range(7)) for i in range(300))
+        df = spark.createDataFrame([(0, text)], "doc_id bigint, text string")
+        rows = sorted(
+            chunk_documents(df, chunk_tokens=64, overlap=8, min_tokens=10).collect(),
+            key=lambda r: r.chunk_idx,
+        )
+        assert [r.chunk_text for r in rows] == _ref_chunks(text, 64, 8)
+        assert len(rows) == 38
+
+    def test_curate_plan_tokenizes_once(self, spark, corpus_001):
+        from jobs.curate_job import build_curated_chunks
+        from pdf_parser_spark.pipeline import extract_pipeline, load_pages
+
+        chunks = build_curated_chunks(
+            spark, corpus_001, chunk_tokens=64, overlap=8, min_tokens=10
+        )
+        plan = chunks._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("split(") == 1, plan
+        texts = dict(
+            extract_pipeline(load_pages(spark, corpus_001))
+            .where("status = 'ok'").select("url", "text").collect()
+        )
+        got = {}
+        for r in chunks.collect():
+            got.setdefault(r.url, {})[r.chunk_idx] = r.chunk_text
+        assert any(len(c) > 1 for c in got.values())
+        for url, by_idx in got.items():
+            assert [by_idx[i] for i in sorted(by_idx)] == _ref_chunks(texts[url], 64, 8)
 
 
 class TestPackDocuments:

@@ -23,8 +23,8 @@ class TestSqlSurface:
             r.url: (r.text, r.fields_json, r.file_hash)
             for r in spark.sql(
                 """
-                SELECT url, pp_extract_text(html) AS text,
-                       pp_extract_fields(pp_extract_text(html)) AS fields_json,
+                SELECT url, pp_extract_text(url, html) AS text,
+                       pp_extract_fields(pp_extract_text(url, html)) AS fields_json,
                        pp_file_hash(html) AS file_hash
                 FROM pages_sql WHERE length(html) > 0
                 """
@@ -44,13 +44,18 @@ class TestSqlSurface:
 
     def test_invalid_rows_yield_null_not_error(self, spark):
         df = spark.createDataFrame(
-            [(b"not a pdf at all",), (None,), (b"x" * 10,)], "html binary"
+            [("u/a.html", b"not a pdf at all"), ("u/b.html", None),
+             ("u/c.html", b"x" * 10),
+             # the .pdf url routes to the PDF chain (magic check fails)
+             ("u/d.pdf", b"<html><body>" + b"x" * 200 + b"</body></html>"),
+             (None, b"<html><body>" + b"x" * 200 + b"</body></html>")],
+            "url string, html binary",
         )
         df.createOrReplaceTempView("bad_sql")
         rows = spark.sql(
-            "SELECT pp_extract_text(html) AS t FROM bad_sql"
+            "SELECT pp_extract_text(url, html) AS t FROM bad_sql"
         ).collect()
-        assert [r.t for r in rows] == [None, None, None]
+        assert [r.t for r in rows] == [None] * 5
 
     def test_pretty_json_rendering(self, spark):
         rows = spark.sql(

@@ -46,6 +46,29 @@ class TestExtractJobCli:
         ).fetchone()
         assert n[0] == n[1] == 100  # no duplicate urls after the rerun
 
+    @pytest.mark.parametrize("committed", ["missing", "empty"])
+    def test_resume_with_nothing_committed(self, corpus, tmp_path, committed):
+        out = tmp_path / "out4"
+        if committed == "empty":
+            out.mkdir()
+        r = _run(["--input", corpus, "--output", str(out), "--resume"])
+        assert r.returncode == 0, r.stderr[-2000:]
+        assert "'docs': 100" in r.stderr
+        n = duckdb.sql(
+            f"SELECT count(DISTINCT url), count(*) FROM read_parquet('{out}/*.parquet')"
+        ).fetchone()
+        assert n[0] == n[1] == 100
+
+    def test_resume_unreadable_commit_fails(self, corpus, tmp_path):
+        # an unreadable committed output must stop the job, not be taken
+        # for "nothing committed" and re-append every url
+        out = tmp_path / "out5"
+        out.mkdir()
+        (out / "part-00000.parquet").write_bytes(b"not a parquet file")
+        r = _run(["--input", corpus, "--output", str(out), "--resume"])
+        assert r.returncode != 0
+        assert sorted(p.name for p in out.iterdir()) == ["part-00000.parquet"]
+
     def test_lineage_output(self, corpus, tmp_path):
         out, lin = str(tmp_path / "out3"), str(tmp_path / "lineage")
         r = _run(["--input", corpus, "--output", out, "--lineage-output", lin])

@@ -1,12 +1,14 @@
 """End-to-end Spark pipeline tests: golden identity, error isolation, resume,
 NULL safety, and distributed-equals-local determinism."""
 
+import os
 import shutil
 from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
+from pdf_parser_spark import pipeline
 from pdf_parser_spark.pipeline import (
     extract_pipeline, lineage_rows, load_pages, resume_against, run_job,
     with_metrics,
@@ -18,7 +20,7 @@ TS = datetime(2024, 1, 1)
 
 @pytest.fixture(scope="module")
 def extracted(spark, corpus_001):
-    df, obs = run_job(spark, corpus_001, out_path=None)
+    df, obs = run_job(load_pages(spark, corpus_001), out_path=None)
     rows = df.collect()
     return rows, obs.get
 
@@ -95,10 +97,10 @@ class TestEndToEnd:
 class TestResume:
     def test_idempotent_rerun(self, spark, corpus_001, tmp_path):
         out = str(tmp_path / "sink")
-        _, obs1 = run_job(spark, corpus_001, out_path=out)
+        _, obs1 = run_job(load_pages(spark, corpus_001), out_path=out)
         n1 = obs1.get["docs"]
         assert spark.read.parquet(out).count() == n1
-        _, obs2 = run_job(spark, corpus_001, out_path=out)
+        _, obs2 = run_job(load_pages(spark, corpus_001), out_path=out)
         assert obs2.get["docs"] == 0  # nothing reprocessed
         assert spark.read.parquet(out).count() == n1  # no duplicates
         shutil.rmtree(out, ignore_errors=True)
@@ -113,6 +115,33 @@ class TestResume:
         assert remaining.count() == pages.count() - 40
         shutil.rmtree(out, ignore_errors=True)
 
+    @pytest.mark.parametrize("committed", ["missing", "empty"])
+    def test_nothing_committed_processes_every_url(
+        self, spark, corpus_001, tmp_path, committed
+    ):
+        # a missing path and an empty directory both mean "nothing
+        # committed yet": every url is processed and written once
+        out = str(tmp_path / "sink3")
+        if committed == "empty":
+            os.makedirs(out)
+        pages = load_pages(spark, corpus_001)
+        _, obs = run_job(pages, out_path=out)
+        assert obs.get["docs"] == pages.count()
+        written = spark.read.parquet(out)
+        assert written.count() == written.select("url").distinct().count() == pages.count()
+
+    def test_unreadable_commit_raises_and_appends_nothing(
+        self, spark, corpus_001, tmp_path
+    ):
+        # committed output that exists but cannot be read must not be taken
+        # for "nothing committed": that would re-append every url
+        out = tmp_path / "sink4"
+        out.mkdir()
+        (out / "part-00000.parquet").write_bytes(b"not a parquet file")
+        with pytest.raises(Exception):
+            run_job(load_pages(spark, corpus_001), out_path=str(out))
+        assert sorted(os.listdir(out)) == ["part-00000.parquet"]
+
 
 class TestNullSafety:
     def test_null_rows_never_vanish(self, spark):
@@ -121,11 +150,13 @@ class TestNullSafety:
             ("u://nullhtml", TS, None, "", "en"),
             ("u://nulltext", TS, b"", None, "en"),
             ("u://nullboth", TS, None, None, "en"),
+            (None, TS, b"<html><body><p>no url</p></body></html>", "", "en"),
         ]
         df = spark.createDataFrame(rows, ROW_SCHEMA)
         out = extract_pipeline(df).collect()
-        assert len(out) == 4
+        assert len(out) == 5
         assert all(r.status == "error" for r in out)
+        assert [r.error for r in out if r.url is None] == ["missing url"]
 
     def test_adversarial_bytes_become_error_rows(self, spark):
         rows = [
@@ -142,19 +173,23 @@ class TestDeterminism:
     def test_partitioning_invariance(self, spark, corpus_001):
         """Same corpus at different partition counts -> identical output."""
         pages = load_pages(spark, corpus_001)
-        a = extract_pipeline(pages, num_partitions=2).drop("extracted_at")
-        b = extract_pipeline(pages, num_partitions=16).drop("extracted_at")
+        a = extract_pipeline(pages, repartition_partitions=2).drop("extracted_at")
+        b = extract_pipeline(pages, repartition_partitions=16).drop("extracted_at")
         a_rows = sorted(a.collect(), key=lambda r: r.url)
         b_rows = sorted(b.collect(), key=lambda r: r.url)
         assert a_rows == b_rows
 
-    def test_mega_threshold_invariance(self, spark, corpus_001):
-        """Skew routing must not change results, only placement."""
+    def test_mega_threshold_invariance(self, spark, corpus_001, monkeypatch):
+        """Skew routing must not change results, only placement: the
+        exchange with every document routed as a mega-doc equals the
+        default shuffle-free plan."""
         pages = load_pages(spark, corpus_001).limit(60)
-        a = extract_pipeline(pages, mega_threshold=1).drop("extracted_at")
-        b = extract_pipeline(pages, mega_threshold=1 << 30).drop("extracted_at")
-        assert sorted(a.collect(), key=lambda r: r.url) == sorted(
-            b.collect(), key=lambda r: r.url
+        monkeypatch.setattr(pipeline, "MEGA_THRESHOLD", 1)
+        a = extract_pipeline(pages, repartition_partitions=4)
+        assert "RoundRobinPartitioning" in a._jdf.queryExecution().executedPlan().toString()
+        b = extract_pipeline(pages)
+        assert sorted(a.drop("extracted_at").collect(), key=lambda r: r.url) == sorted(
+            b.drop("extracted_at").collect(), key=lambda r: r.url
         )
 
 

@@ -13,9 +13,10 @@ This module converts that process risk into a red test:
 - `check()` (wired into `tests/test_entry_contract.py`) fails when an
   OFF-window query's definition/oracle hash drifted from the ledger, or when
   any module in its (transitive) import closure changed — `git diff
-  <ledger-commit> -- pdf_parser_spark/` against the WORKING TREE, so
-  uncommitted edits count too. In-window queries are exempt: the driver
-  re-proves them this round by construction.
+  <ledger-commit> -- pdf_parser_spark/ jobs/` against the WORKING TREE, so
+  uncommitted edits count too (`jobs/` because queries import the
+  spark-submit jobs' composed plans). In-window queries are exempt: the
+  driver re-proves them this round by construction.
 
 Round workflow:
 1. round start: stamp last round's window at the commit the driver verified
@@ -41,6 +42,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "pdf_parser_spark"
+TRACKED = (PKG, "jobs")  # source trees whose edits can stale a query
 LEDGER = os.path.join(REPO, "tools", "freshness_ledger.json")
 WINDOW = 50  # driver checks the first 50 queries() entries
 
@@ -65,10 +67,11 @@ _ALIAS_MODULES = {
 
 def _pkg_files() -> list[str]:
     out = []
-    for root, _dirs, files in os.walk(os.path.join(REPO, PKG)):
-        for f in files:
-            if f.endswith(".py"):
-                out.append(os.path.relpath(os.path.join(root, f), REPO))
+    for tree in TRACKED:
+        for root, _dirs, files in os.walk(os.path.join(REPO, tree)):
+            for f in files:
+                if f.endswith(".py"):
+                    out.append(os.path.relpath(os.path.join(root, f), REPO))
     return sorted(out)
 
 
@@ -95,7 +98,7 @@ def _resolve_import(src_file: str, frm: str, names: str) -> list[str]:
         parts = base.split(".")
         parts = parts[: len(parts) - (up - 1)] if up > 1 else parts
         frm = ".".join(parts + ([frm.lstrip(".")] if frm.strip(".") else []))
-    if not frm.startswith(PKG):
+    if frm.split(".")[0] not in TRACKED:
         return []
     hits = []
     f = _module_to_file(frm)
@@ -214,7 +217,7 @@ def snapshot(entry=None) -> dict[str, dict[str, str]]:
 
 def _git_changed_since(commit: str) -> set[str]:
     out = subprocess.run(
-        ["git", "diff", "--name-only", commit, "--", PKG],
+        ["git", "diff", "--name-only", commit, "--", *TRACKED],
         cwd=REPO, capture_output=True, text=True, check=True,
     )
     return {l.strip() for l in out.stdout.splitlines() if l.strip()}
