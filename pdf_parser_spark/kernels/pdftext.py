@@ -22,9 +22,13 @@ This module must stay importable on executors with stdlib only.
 
 from __future__ import annotations
 
+import binascii
+import codecs
 import re
+import struct
 import zlib
-from typing import Any, Dict, Iterator, List, Optional, Tuple
+from operator import itemgetter
+from typing import Any, Dict, Iterator, List, Optional, Sequence, Tuple
 
 __all__ = ["PDFProcessingError", "extract_text", "extract_pages"]
 
@@ -41,7 +45,6 @@ class PDFProcessingError(Exception):
 # --------------------------------------------------------------------------
 
 _WHITESPACE = b"\x00\t\n\x0c\r "
-_DELIMITERS = b"()<>[]{}/%"
 
 
 class Name(str):
@@ -62,66 +65,80 @@ class StreamObj:
         self.raw = raw
 
 
-def _skip_ws(data: bytes, i: int) -> int:
-    n = len(data)
-    while i < n:
-        c = data[i]
-        if c == 0x25:  # '%' comment runs to EOL
-            j = data.find(b"\n", i)
-            if j < 0:
-                j = data.find(b"\r", i)
-            i = n if j < 0 else j + 1
-        elif c in _WHITESPACE:
-            i += 1
-        else:
-            break
-    return i
-
-
-_NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
-_REF_RE = re.compile(rb"(\d+)\s+(\d+)\s+R(?![A-Za-z0-9])")
+# The one lexer: skip whitespace and `%` comments (group 1; a comment runs to
+# the next \n, without one to the next \r, else to the end of the data),
+# then match at most one token. `lastindex` names the token:
+_TOKEN_RE = re.compile(
+    rb"((?:[\x00\t\n\x0c\r ]+|%[^\n]*\n|%[^\r]*\r|%[\s\S]*)*)"
+    rb"(?:(\d++)\s++(\d++)\s++R(?![A-Za-z0-9])"  # 3: reference (groups 2, 3)
+    rb"|([+-]?(?:\d+\.?\d*|\.\d+))"            # 4: number
+    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"    # 5: name (`#` escapes: _parse_name)
+    rb"|\(([^()\\]*)\)"                        # 6: literal string, no escape or nesting
+    rb"|(<<)"                                   # 7: dictionary
+    rb"|<([^>]*)>"                              # 8: hex string
+    rb"|(\[)"                                   # 9: array
+    rb"|([A-Za-z'\"*01]+)"                      # 10: operator, or keyword in an object
+    rb")?"                                      # 1: no token (end of data, or a char
+)                                               #    the fallbacks below handle)
+_REF, _NUM, _NAME, _LITERAL, _DICT, _HEX, _ARRAY, _WORD = 3, 4, 5, 6, 7, 8, 9, 10
 
 
 def _parse_object(data: bytes, i: int) -> Tuple[Any, int]:
-    """Parse one PDF object starting at (whitespace-skipped) position i."""
-    i = _skip_ws(data, i)
-    if i >= len(data):
-        raise PDFProcessingError("unexpected end of data")
-    c = data[i : i + 1]
-    if c == b"<":
-        if data[i : i + 2] == b"<<":
-            return _parse_dict(data, i)
-        return _parse_hex_string(data, i)
-    if c == b"(":
-        return _parse_literal_string(data, i)
-    if c == b"/":
-        return _parse_name(data, i)
-    if c == b"[":
-        return _parse_array(data, i)
-    if c in b"+-.0123456789":
-        m = _REF_RE.match(data, i)
-        if m:
-            return Ref((int(m.group(1)), int(m.group(2)))), m.end()
-        m = _NUM_RE.match(data, i)
-        if not m:
-            raise PDFProcessingError(f"bad number at {i}")
-        tok = m.group(0)
+    """Parse one PDF object starting at position i (whitespace skipped)."""
+    return _object_at(data, _TOKEN_RE.match(data, i))
+
+
+def _object_at(data: bytes, m: "re.Match[bytes]") -> Tuple[Any, int]:
+    """The object whose first token `_TOKEN_RE` matched as `m`, and its end."""
+    k = m.lastindex
+    if k == _NAME:
+        body = m.group(_NAME)
+        if b"#" in body:
+            return _parse_name(data, m.start(_NAME) - 1)
+        return Name(body.decode("latin-1")), m.end()
+    if k == _NUM:
+        tok = m.group(_NUM)
         if b"." in tok:
             return float(tok), m.end()
         return int(tok), m.end()
-    for kw, val in ((b"true", True), (b"false", False), (b"null", None)):
-        if data[i : i + len(kw)] == kw:
-            return val, i + len(kw)
+    if k == _REF:
+        return Ref((int(m.group(2)), int(m.group(3)))), m.end()
+    if k == _DICT:
+        return _parse_dict(data, m.end())
+    if k == _ARRAY:
+        return _parse_array(data, m.end())
+    if k == _HEX:
+        return _hex_bytes(m.group(_HEX)), m.end()
+    if k == _LITERAL:
+        return m.group(_LITERAL), m.end()
+    if k == _WORD:
+        i = m.start(_WORD)
+        word = m.group(_WORD)
+        for kw, val in ((b"true", True), (b"false", False), (b"null", None)):
+            if word.startswith(kw):
+                return val, i + len(kw)
+        raise PDFProcessingError(f"unparseable object at offset {i}: {data[i:i+16]!r}")
+    i = m.end()
+    if i >= len(data):
+        raise PDFProcessingError("unexpected end of data")
+    c = data[i]
+    if c == 0x28:  # '(' with escapes or nested parens
+        return _parse_literal_string(data, i)
+    if c == 0x3C:  # '<' with no '>' after it
+        raise PDFProcessingError("unterminated hex string")
+    if c in b"+-.0123456789":
+        raise PDFProcessingError(f"bad number at {i}")
     raise PDFProcessingError(f"unparseable object at offset {i}: {data[i:i+16]!r}")
 
 
 def _parse_name(data: bytes, i: int) -> Tuple[Name, int]:
+    """The name at i, whatever byte i holds, decoding `#xx` escapes."""
     i += 1  # consume '/'
     out = bytearray()
     n = len(data)
     while i < n:
         c = data[i]
-        if c in _WHITESPACE or c in _DELIMITERS:
+        if c in _WHITESPACE or c in b"()<>[]{}/%":
             break
         if c == 0x23 and i + 2 < n:  # '#' hex escape
             try:
@@ -136,42 +153,51 @@ def _parse_name(data: bytes, i: int) -> Tuple[Name, int]:
 
 
 def _parse_dict(data: bytes, i: int) -> Tuple[Dict[str, Any], int]:
-    i += 2  # '<<'
+    """The dictionary whose `<<` ends at i."""
     out: Dict[str, Any] = {}
     while True:
-        i = _skip_ws(data, i)
+        m = _TOKEN_RE.match(data, i)
+        i = m.end(1)
         if data[i : i + 2] == b">>":
             return out, i + 2
-        key, i = _parse_name(data, i)
-        val, i = _parse_object(data, i)
-        out[str(key)] = val
+        if m.lastindex == _NAME and b"#" not in m.group(_NAME):
+            key, i = m.group(_NAME).decode("latin-1"), m.end()
+        else:  # a key is read as a name whatever its first byte
+            name, i = _parse_name(data, i)
+            key = str(name)
+        out[key], i = _parse_object(data, i)
 
 
 def _parse_array(data: bytes, i: int) -> Tuple[List[Any], int]:
-    i += 1  # '['
+    """The array whose `[` ends at i."""
+    # unsigned integers and whitespace only (/Widths, /W, /MediaBox): split
+    j = data.find(b"]", i, i + 8192)
+    if j >= 0:
+        body = data[i:j]
+        if not body.translate(None, b"0123456789\t\n\x0c\r "):
+            return list(map(int, body.split())), j + 1
     out: List[Any] = []
     while True:
-        i = _skip_ws(data, i)
-        if data[i : i + 1] == b"]":
-            return out, i + 1
-        val, i = _parse_object(data, i)
+        m = _TOKEN_RE.match(data, i)
+        j = m.end(1)
+        if data[j : j + 1] == b"]":
+            return out, j + 1
+        val, i = _object_at(data, m)
         out.append(val)
 
 
-def _parse_hex_string(data: bytes, i: int) -> Tuple[bytes, int]:
-    j = data.find(b">", i + 1)
-    if j < 0:
-        raise PDFProcessingError("unterminated hex string")
-    hx = bytes(c for c in data[i + 1 : j] if c not in _WHITESPACE)
+def _hex_bytes(hx: bytes) -> bytes:
+    hx = hx.translate(None, _WHITESPACE)
     if len(hx) % 2:
         hx += b"0"
-    return bytes.fromhex(hx.decode("ascii")), j + 1
+    return bytes.fromhex(hx.decode("ascii"))
 
 
 _ESCAPES = {
     0x6E: b"\n", 0x72: b"\r", 0x74: b"\t", 0x62: b"\b",
     0x66: b"\x0c", 0x28: b"(", 0x29: b")", 0x5C: b"\\",
 }
+_LITERAL_RUN = re.compile(rb"[^()\\]+")
 
 
 def _parse_literal_string(data: bytes, i: int) -> Tuple[bytes, int]:
@@ -213,8 +239,9 @@ def _parse_literal_string(data: bytes, i: int) -> Tuple[bytes, int]:
             out.append(c)
             i += 1
         else:
-            out.append(c)
-            i += 1
+            run = _LITERAL_RUN.match(data, i)
+            out += run.group()
+            i = run.end()
     raise PDFProcessingError("unterminated literal string")
 
 
@@ -222,7 +249,8 @@ def _parse_literal_string(data: bytes, i: int) -> Tuple[bytes, int]:
 # Document: indirect objects, streams, page tree
 # --------------------------------------------------------------------------
 
-_OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
+_OBJ_RE = re.compile(rb"(\d++)\s++(\d++)\s++obj\b")  # possessive: same matches, no backtracking
+_XREF_RE = re.compile(rb"/Type\s*/XRef")
 
 
 class PDFDocument:
@@ -231,6 +259,7 @@ class PDFDocument:
             raise PDFProcessingError("missing %PDF header")
         self.data = data
         self.objects: Dict[int, Any] = {}
+        self._fonts: Dict[int, Tuple[Dict[str, Any], Font]] = {}
         self._check_encryption()
         self._scan_objects()
         self._load_object_streams()
@@ -255,7 +284,7 @@ class PDFDocument:
                 pass
             pos = t + 7
         # xref-stream trailers: `/Type /XRef ... /Encrypt N 0 R`
-        for m in re.finditer(rb"/Type\s*/XRef", self.data):
+        for m in _XREF_RE.finditer(self.data) if b"/XRef" in self.data else ():
             start = self.data.rfind(b"<<", 0, m.start())
             if start < 0:
                 continue
@@ -277,17 +306,17 @@ class PDFDocument:
         same object number override earlier ones, matching update order.
         """
         data = self.data
-        guard = 0  # skip matches that fall inside a previously-seen stream
-        for m in _OBJ_RE.finditer(data):
-            if m.start() < guard:
-                continue
+        m = _OBJ_RE.search(data)
+        while m:
+            pos = m.end()
             num = int(m.group(1))
             try:
-                val, i = _parse_object(data, m.end())
+                val, i = _parse_object(data, pos)
             except Exception:
+                m = _OBJ_RE.search(data, pos)
                 continue
             if isinstance(val, dict):
-                j = _skip_ws(data, i)
+                j = _TOKEN_RE.match(data, i).end(1)
                 if data[j : j + 6] == b"stream":
                     k = j + 6
                     if data[k : k + 2] == b"\r\n":
@@ -296,9 +325,11 @@ class PDFDocument:
                         k += 1
                     end = self._stream_end(val, k)
                     val = StreamObj(val, data[k:end])
+                    # resume after the body: headers inside it are not objects
                     es = data.find(b"endstream", end)
-                    guard = (es + 9) if es >= 0 else end
+                    pos = (es + 9) if es >= 0 else end
             self.objects[num] = val
+            m = _OBJ_RE.search(data, pos)
 
     def _stream_end(self, sdict: Dict[str, Any], start: int) -> int:
         length = sdict.get("Length")
@@ -341,6 +372,14 @@ class PDFDocument:
                     self.objects.setdefault(onum, val)
             except Exception:
                 continue
+
+    def font(self, fdict: Dict[str, Any]) -> Font:
+        """The Font of a font dict, loaded once per document (pages and forms
+        share their font objects)."""
+        hit = self._fonts.get(id(fdict))
+        if hit is None:  # the dict is kept alongside, so its id stays unique
+            hit = self._fonts[id(fdict)] = (fdict, _load_font(self, fdict))
+        return hit[1]
 
     # -- resolution --------------------------------------------------------
     def resolve(self, obj: Any, depth: int = 0) -> Any:
@@ -445,11 +484,7 @@ def decode_stream(stream: StreamObj, doc: Optional[PDFDocument] = None) -> bytes
                     int(resolve(p.get("Columns", 1)) or 1),
                 )
         elif f == "ASCIIHexDecode":
-            hx = data.split(b">")[0]
-            hx = bytes(c for c in hx if c not in _WHITESPACE)
-            if len(hx) % 2:
-                hx += b"0"
-            data = bytes.fromhex(hx.decode("ascii"))
+            data = _hex_bytes(data.split(b">")[0])
         elif f == "ASCII85Decode":
             data = _ascii85_decode(data)
         elif f == "RunLengthDecode":
@@ -662,9 +697,8 @@ def _parse_tounicode(raw: bytes) -> Dict[int, str]:
     out: Dict[int, str] = {}
 
     def _utf16(hx: bytes) -> str:
-        b = bytes.fromhex(hx.decode("ascii"))
-        try:
-            return b.decode("utf-16-be")
+        try:  # what bytes.decode("utf-16-be") runs, without the codec lookup
+            return codecs.utf_16_be_decode(binascii.unhexlify(hx), None, True)[0]
         except UnicodeDecodeError:
             return ""
 
@@ -727,9 +761,13 @@ def _parse_tounicode(raw: bytes) -> Dict[int, str]:
 
 
 class Font:
-    """Decoded per-font state: code size, unicode map, advance widths."""
+    """Decoded per-font state: code size, unicode map, advance widths.
 
-    __slots__ = ("two_byte", "tounicode", "widths", "default_width", "differences")
+    `glyphs` memoizes code -> (unicode_text, advance_in_text_space); the
+    glyph loop reads it and fills misses through `glyph`."""
+
+    __slots__ = ("two_byte", "tounicode", "widths", "default_width", "differences",
+                 "glyphs")
 
     def __init__(self) -> None:
         self.two_byte = False
@@ -737,29 +775,28 @@ class Font:
         self.widths: Dict[int, float] = {}
         self.default_width = 0.5
         self.differences: Dict[int, str] = {}  # /Encoding /Differences
+        self.glyphs: Dict[int, Tuple[str, float]] = {}
 
-    def decode(self, s: bytes) -> Iterator[Tuple[int, str, float]]:
-        """Yield (code, unicode_text, advance_in_text_space) per glyph."""
+    def codes(self, s: bytes) -> Sequence[int]:
+        """The character codes of a shown string (2-byte big-endian for Type0)."""
         if self.two_byte:
-            for i in range(0, len(s) - 1, 2):
-                code = (s[i] << 8) | s[i + 1]
-                yield code, self._uni(code), self.widths.get(code, self.default_width)
-        else:
-            for code in s:
-                yield code, self._uni(code), self.widths.get(code, self.default_width)
+            k = len(s) // 2
+            return struct.unpack(">%dH" % k, s[: 2 * k])
+        return s
 
-    def _uni(self, code: int) -> str:
+    def glyph(self, code: int) -> Tuple[str, float]:
+        """Fill `glyphs[code]`: ToUnicode, else (single-byte) /Differences,
+        WinAnsi, Latin-1; the advance from /Widths or /W, else the default."""
         u = self.tounicode.get(code)
-        if u is not None:
-            return u
-        if not self.two_byte:
-            u = self.differences.get(code)
-            if u is not None:
-                return u
-            if code in _WINANSI_DIFF:
-                return _WINANSI_DIFF[code]
-            return bytes([code]).decode("latin-1")
-        return ""
+        if u is None:
+            if self.two_byte:
+                u = ""
+            else:
+                u = self.differences.get(code)
+                if u is None:
+                    u = _WINANSI_DIFF.get(code) or chr(code)
+        g = self.glyphs[code] = (u, self.widths.get(code, self.default_width))
+        return g
 
 
 def _load_font(doc: PDFDocument, fdict: Dict[str, Any]) -> Font:
@@ -800,10 +837,11 @@ def _load_font(doc: PDFDocument, fdict: Dict[str, Any]) -> Font:
         first = doc.resolve(fdict.get("FirstChar"))
         widths = doc.resolve(fdict.get("Widths"))
         if isinstance(first, (int, float)) and isinstance(widths, list):
-            for off, w in enumerate(widths):
-                w = doc.resolve(w)
-                if isinstance(w, (int, float)):
-                    font.widths[int(first) + off] = float(w) / 1000.0
+            known = [(off, w) for off, w in enumerate(map(doc.resolve, widths))
+                     if isinstance(w, (int, float))]
+            if known:
+                base = int(first)
+                font.widths.update((base + off, float(w) / 1000.0) for off, w in known)
     return font
 
 
@@ -836,8 +874,6 @@ def _parse_cid_widths(doc: PDFDocument, w: List[Any], out: Dict[int, float]) -> 
 # Content-stream interpreter
 # --------------------------------------------------------------------------
 
-_OP_RE = re.compile(rb"[A-Za-z'\"*01]+")
-
 Matrix = Tuple[float, float, float, float, float, float]
 _IDENTITY: Matrix = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 
@@ -853,47 +889,72 @@ def _mmul(a: Matrix, b: Matrix) -> Matrix:
     )
 
 
-def _content_tokens(data: bytes) -> Iterator[Tuple[str, Any]]:
-    """Yield ('val', obj) operands and ('op', name) operators."""
-    i = 0
-    n = len(data)
+def _content_ops(data: bytes) -> Iterator[Tuple[bytes, List[Any]]]:
+    """Yield (operator, operands) per content-stream operator.
+
+    An operand that does not parse is skipped one byte at a time; an inline
+    image (BI ... EI) is skipped whole."""
+    match = _TOKEN_RE.match
+    operands: List[Any] = []
+    i, n = 0, len(data)
     while i < n:
-        i = _skip_ws(data, i)
-        if i >= n:
-            break
-        c = data[i : i + 1]
-        if c in b"/<([+-.0123456789" or data[i : i + 2] == b"<<":
-            try:
-                val, i = _parse_object(data, i)
-                yield ("val", val)
-                continue
-            except Exception:
-                i += 1
-                continue
-        m = _OP_RE.match(data, i)
-        if m:
-            yield ("op", m.group(0).decode("latin-1"))
+        m = match(data, i)
+        if m.lastindex == _WORD:
+            op = m.group(_WORD)
+            yield op, operands
+            operands = []
             i = m.end()
-            if m.group(0) in (b"BI",):  # inline image: skip to EI
+            if op == b"BI":  # inline image: skip to EI
                 j = data.find(b"EI", i)
                 i = n if j < 0 else j + 2
-        else:
-            i += 1
+            continue
+        j = m.end(1)
+        if j >= n:
+            break
+        try:
+            val, i = _object_at(data, m)
+        except Exception:
+            i = j + 1
+            continue
+        operands.append(val)
 
 
-class _TextState:
-    __slots__ = ("tm", "tlm", "tl", "tc", "tw", "th", "ts", "font", "fsize")
+def _show(
+    glyphs: List[Tuple[float, float, float, str]], s: bytes, font: Optional[Font],
+    fsize: float, tc: float, tw: float, th: float, ts: float, tm: Matrix, ctm: Matrix,
+) -> Matrix:
+    """Append one (x0, x1, y, char) per glyph of a shown string; return the
+    advanced text matrix (unchanged without a font).
 
-    def __init__(self) -> None:
-        self.tm: Matrix = _IDENTITY
-        self.tlm: Matrix = _IDENTITY
-        self.tl = 0.0
-        self.tc = 0.0
-        self.tw = 0.0
-        self.th = 1.0
-        self.ts = 0.0
-        self.font: Optional[Font] = None
-        self.fsize = 0.0
+    Only the translation row of trm = S x (tm x ctm) is consumed (S =
+    (fs*th,0,0,fs,0,ts)), so only that row is expanded, and the advance is
+    the translation-by-adv premultiply of tm, expanded. Each float
+    expression keeps the operand order of the full matrix chain, so the
+    positions, which decide word and line breaks, are bit-identical to it.
+    """
+    if font is None:
+        return tm
+    a, b, c, d, e, f = tm
+    c0, c1, c2, c3, c4, c5 = ctm
+    tx = ts * (c * c0 + d * c2)
+    ty = ts * (c * c1 + d * c3)
+    space = -1 if font.two_byte else 32  # word spacing: single-byte code 32 only
+    known = font.glyphs
+    append = glyphs.append
+    for code in font.codes(s):
+        try:
+            uni, w0 = known[code]
+        except KeyError:
+            uni, w0 = font.glyph(code)
+        x0 = tx + (e * c0 + f * c2 + c4)
+        adv = w0 * fsize + tc
+        if code == space:
+            adv += tw
+        adv *= th
+        append((x0, x0 + adv, ty + (e * c1 + f * c3 + c5), uni))
+        e = adv * a + e
+        f = adv * b + f
+    return (a, b, c, d, e, f)
 
 
 def _page_glyphs(doc: PDFDocument, page: Dict[str, Any]) -> List[Tuple[float, float, float, str]]:
@@ -932,7 +993,7 @@ def _fonts_of(doc: PDFDocument, res: Dict[str, Any]) -> Dict[str, Font]:
         for fname, fref in font_dicts.items():
             fobj = doc.resolve(fref)
             if isinstance(fobj, dict):
-                fonts[fname] = _load_font(doc, fobj)
+                fonts[fname] = doc.font(fobj)
     return fonts
 
 
@@ -953,93 +1014,69 @@ def _run_content(
     fonts = _fonts_of(doc, res)
     ctm: Matrix = ctm0
     gstack: List[Matrix] = []
-    st = _TextState()
-    stack: List[Any] = []
+    # text state
+    tm: Matrix = _IDENTITY
+    tlm: Matrix = _IDENTITY
+    tl = tc = tw = ts = fsize = 0.0
+    th = 1.0
+    font: Optional[Font] = None
 
-    def show(s: bytes) -> None:
-        if st.font is None:
-            return
-        for code, uni, w0 in st.font.decode(s):
-            # only the translation row of trm = S x (tm x ctm) is consumed
-            # (S = (fs*th,0,0,fs,0,ts)), so expand just that row; the float
-            # expressions below are bit-identical to the full _mmul chain
-            m = _mmul(st.tm, ctm)
-            x0 = st.ts * m[2] + m[4]
-            y = st.ts * m[3] + m[5]
-            adv = w0 * st.fsize + st.tc
-            if code == 32 and not st.font.two_byte:
-                adv += st.tw
-            adv *= st.th
-            glyphs.append((x0, x0 + adv, y, uni))
-            # translation-by-adv premultiply, expanded (bit-identical)
-            tm = st.tm
-            st.tm = (tm[0], tm[1], tm[2], tm[3],
-                     adv * tm[0] + tm[4], adv * tm[1] + tm[5])
-
-    for kind, tok in _content_tokens(data):
-        if kind == "val":
-            stack.append(tok)
-            continue
-        op = tok
+    for op, stack in _content_ops(data):
         try:
-            if op == "BT":
-                st.tm = _IDENTITY
-                st.tlm = _IDENTITY
-            elif op == "ET":
-                pass
-            elif op == "Tf" and len(stack) >= 2:
-                st.fsize = float(stack[-1])
-                st.font = fonts.get(str(stack[-2]))
-            elif op == "Td" and len(stack) >= 2:
-                st.tlm = _mmul((1, 0, 0, 1, float(stack[-2]), float(stack[-1])), st.tlm)
-                st.tm = st.tlm
-            elif op == "TD" and len(stack) >= 2:
-                st.tl = -float(stack[-1])
-                st.tlm = _mmul((1, 0, 0, 1, float(stack[-2]), float(stack[-1])), st.tlm)
-                st.tm = st.tlm
-            elif op == "Tm" and len(stack) >= 6:
-                st.tlm = tuple(float(v) for v in stack[-6:])  # type: ignore[assignment]
-                st.tm = st.tlm
-            elif op == "T*":
-                st.tlm = _mmul((1, 0, 0, 1, 0.0, -st.tl), st.tlm)
-                st.tm = st.tlm
-            elif op == "TL" and stack:
-                st.tl = float(stack[-1])
-            elif op == "Tc" and stack:
-                st.tc = float(stack[-1])
-            elif op == "Tw" and stack:
-                st.tw = float(stack[-1])
-            elif op == "Tz" and stack:
-                st.th = float(stack[-1]) / 100.0
-            elif op == "Ts" and stack:
-                st.ts = float(stack[-1])
-            elif op == "Tj" and stack and isinstance(stack[-1], bytes):
-                show(stack[-1])
-            elif op == "'" and stack and isinstance(stack[-1], bytes):
-                st.tlm = _mmul((1, 0, 0, 1, 0.0, -st.tl), st.tlm)
-                st.tm = st.tlm
-                show(stack[-1])
-            elif op == '"' and len(stack) >= 3 and isinstance(stack[-1], bytes):
-                st.tw = float(stack[-3])
-                st.tc = float(stack[-2])
-                st.tlm = _mmul((1, 0, 0, 1, 0.0, -st.tl), st.tlm)
-                st.tm = st.tlm
-                show(stack[-1])
-            elif op == "TJ" and stack and isinstance(stack[-1], list):
+            if op == b"BT":
+                tm = _IDENTITY
+                tlm = _IDENTITY
+            elif op == b"Tf" and len(stack) >= 2:
+                fsize = float(stack[-1])
+                font = fonts.get(str(stack[-2]))
+            elif op == b"Td" and len(stack) >= 2:
+                tlm = _mmul((1, 0, 0, 1, float(stack[-2]), float(stack[-1])), tlm)
+                tm = tlm
+            elif op == b"TD" and len(stack) >= 2:
+                tl = -float(stack[-1])
+                tlm = _mmul((1, 0, 0, 1, float(stack[-2]), float(stack[-1])), tlm)
+                tm = tlm
+            elif op == b"Tm" and len(stack) >= 6:
+                tlm = tuple(float(v) for v in stack[-6:])  # type: ignore[assignment]
+                tm = tlm
+            elif op == b"T*":
+                tlm = _mmul((1, 0, 0, 1, 0.0, -tl), tlm)
+                tm = tlm
+            elif op == b"TL" and stack:
+                tl = float(stack[-1])
+            elif op == b"Tc" and stack:
+                tc = float(stack[-1])
+            elif op == b"Tw" and stack:
+                tw = float(stack[-1])
+            elif op == b"Tz" and stack:
+                th = float(stack[-1]) / 100.0
+            elif op == b"Ts" and stack:
+                ts = float(stack[-1])
+            elif op == b"Tj" and stack and isinstance(stack[-1], bytes):
+                tm = _show(glyphs, stack[-1], font, fsize, tc, tw, th, ts, tm, ctm)
+            elif op == b"'" and stack and isinstance(stack[-1], bytes):
+                tlm = _mmul((1, 0, 0, 1, 0.0, -tl), tlm)
+                tm = _show(glyphs, stack[-1], font, fsize, tc, tw, th, ts, tlm, ctm)
+            elif op == b'"' and len(stack) >= 3 and isinstance(stack[-1], bytes):
+                tw = float(stack[-3])
+                tc = float(stack[-2])
+                tlm = _mmul((1, 0, 0, 1, 0.0, -tl), tlm)
+                tm = _show(glyphs, stack[-1], font, fsize, tc, tw, th, ts, tlm, ctm)
+            elif op == b"TJ" and stack and isinstance(stack[-1], list):
                 for el in stack[-1]:
                     if isinstance(el, bytes):
-                        show(el)
+                        tm = _show(glyphs, el, font, fsize, tc, tw, th, ts, tm, ctm)
                     elif isinstance(el, (int, float)):
-                        adv = -float(el) / 1000.0 * st.fsize * st.th
-                        st.tm = _mmul((1, 0, 0, 1, adv, 0.0), st.tm)
-            elif op == "cm" and len(stack) >= 6:
+                        adv = -float(el) / 1000.0 * fsize * th
+                        tm = _mmul((1, 0, 0, 1, adv, 0.0), tm)
+            elif op == b"cm" and len(stack) >= 6:
                 ctm = _mmul(tuple(float(v) for v in stack[-6:]), ctm)  # type: ignore[arg-type]
-            elif op == "q":
+            elif op == b"q":
                 gstack.append(ctm)
-            elif op == "Q":
+            elif op == b"Q":
                 if gstack:
                     ctm = gstack.pop()
-            elif op == "Do" and stack and depth < 8:
+            elif op == b"Do" and stack and depth < 8:
                 xobjs = doc.resolve(res.get("XObject"))
                 xo = doc.resolve(xobjs.get(str(stack[-1]))) if isinstance(xobjs, dict) else None
                 if isinstance(xo, StreamObj) and xo.sdict.get("Subtype") == "Form":
@@ -1061,12 +1098,14 @@ def _run_content(
                         pass  # a broken form never kills the page
         except (TypeError, ValueError, IndexError):
             pass
-        stack.clear()
 
 
 # --------------------------------------------------------------------------
 # Line / word assembly
 # --------------------------------------------------------------------------
+
+_X0 = itemgetter(0)
+
 
 def _assemble(glyphs: List[Tuple[float, float, float, str]]) -> str:
     """Cluster glyphs into lines by baseline y, split words on gaps > 3pt."""
@@ -1080,28 +1119,29 @@ def _assemble(glyphs: List[Tuple[float, float, float, str]]) -> str:
     lines: List[List[Tuple[float, float, float, str]]] = []
     cur_y: Optional[float] = None
     for g in ordered:
-        if cur_y is None or abs(g[2] - cur_y) > Y_TOLERANCE:
-            lines.append([g])
-            cur_y = g[2]
+        y = g[2]
+        if cur_y is None or abs(y - cur_y) > Y_TOLERANCE:
+            line = [g]
+            lines.append(line)
+            cur_y = y
         else:
-            lines[-1].append(g)
+            line.append(g)
     parts: List[str] = []
     for line in lines:
-        line.sort(key=lambda g: g[0])
+        line.sort(key=_X0)
         words: List[str] = []
         cur: List[str] = []
         prev_x1: Optional[float] = None
         for x0, x1, _y, ch in line:
-            if ch.isspace() or not ch:
+            if ch == " ":  # the only blank glyph left visible
                 if cur:
                     words.append("".join(cur))
                     cur = []
-                prev_x1 = x1
-                continue
-            if prev_x1 is not None and (x0 - prev_x1) > X_TOLERANCE and cur:
+            elif prev_x1 is not None and (x0 - prev_x1) > X_TOLERANCE and cur:
                 words.append("".join(cur))
-                cur = []
-            cur.append(ch)
+                cur = [ch]
+            else:
+                cur.append(ch)
             prev_x1 = x1
         if cur:
             words.append("".join(cur))

@@ -43,7 +43,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, IntegerType, StringType, StructField, StructType, TimestampType,
+    ArrayType, BinaryType, IntegerType, StringType, StructField, StructType,
+    TimestampNTZType, TimestampType,
 )
 
 from .kernels import validate as V
@@ -55,7 +56,7 @@ from .kernels.htmlmain import extract_main_content
 from .kernels.pdftext import PDFProcessingError, extract_text
 
 __all__ = [
-    "OUTPUT_SCHEMA", "load_pages", "extract_pipeline", "extract_kernel",
+    "OUTPUT_SCHEMA", "PAGES_SCHEMA", "load_pages", "extract_pipeline", "extract_kernel",
     "write_output", "resume_against", "resume_from", "with_metrics",
     "route_document", "run_job",
 ]
@@ -84,10 +85,29 @@ OUTPUT_SCHEMA = StructType([
 ])
 
 
+# The page table as Spark infers it from the writers' pyarrow schema (url
+# string, warc_ts timestamp[us] without a time zone, html binary, text
+# string, lang string): corpus.py, perfbench/workloads.py and the driver fuzz.
+PAGES_SCHEMA = StructType([
+    StructField("url", StringType()),
+    StructField("warc_ts", TimestampNTZType()),
+    StructField("html", BinaryType()),
+    StructField("text", StringType()),
+    StructField("lang", StringType()),
+])
+
+
 def load_pages(spark: SparkSession, corpus_dir: str) -> DataFrame:
-    """Scan the page table. With Iceberg this is spark.read.format('iceberg');
-    the small-scale stand-in is the sharded parquet written by corpus.py."""
-    return spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
+    """Scan the page table `<corpus_dir>/pages.parquet` with PAGES_SCHEMA.
+
+    Contract: the table's parquet files hold the PAGES_SCHEMA columns with
+    those types (what Spark infers from the writers' files). Other columns
+    are not read, and a missing column reads as NULL. Declaring the schema
+    means no Spark job runs here: `spark.read.parquet` without one launches
+    a footer-inference job on every call. With Iceberg this is
+    spark.read.format('iceberg'); the small-scale stand-in is the sharded
+    parquet written by corpus.py."""
+    return spark.read.schema(PAGES_SCHEMA).parquet(os.path.join(corpus_dir, "pages.parquet"))
 
 
 # --------------------------------------------------------------------------

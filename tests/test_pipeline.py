@@ -143,6 +143,58 @@ class TestResume:
         assert sorted(os.listdir(out)) == ["part-00000.parquet"]
 
 
+class TestPagesSchema:
+    """`load_pages` declares PAGES_SCHEMA instead of inferring it."""
+
+    @staticmethod
+    def _writers(corpus_dir, tmp_path):
+        """A page table from each writer: corpus.py, perfbench's workloads and
+        the driver fuzz."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        import test_driver_fuzz
+
+        from perfbench.workloads import PAGES_SCHEMA as bench_schema
+
+        bench = tmp_path / "bench"
+        (bench / "pages.parquet").mkdir(parents=True)
+        pq.write_table(
+            pa.Table.from_pydict({"url": ["u"], "warc_ts": [TS], "html": [b"x"],
+                                  "text": [""], "lang": ["en"]}, schema=bench_schema),
+            str(bench / "pages.parquet" / "part-0000.parquet"))
+        fuzz = tmp_path / "fuzz"
+        fuzz.mkdir()
+        test_driver_fuzz._make_pages(str(fuzz))
+        return {"corpus": corpus_dir, "perfbench": str(bench), "driver_fuzz": str(fuzz)}
+
+    def test_declared_schema_equals_inference(self, spark, corpus_001, tmp_path):
+        for name, d in self._writers(corpus_001, tmp_path).items():
+            inferred = spark.read.parquet(os.path.join(d, "pages.parquet")).schema
+            assert inferred == pipeline.PAGES_SCHEMA, name
+            declared = load_pages(spark, d)
+            assert declared.schema == inferred, name
+            assert sorted(declared.collect()) == sorted(
+                spark.read.parquet(os.path.join(d, "pages.parquet")).collect()), name
+
+    def test_load_pages_submits_no_job(self, spark, corpus_001):
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+
+        def jobs_of(fn, group):
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return tracker.getJobIdsForGroup(group)
+
+        path = os.path.join(corpus_001, "pages.parquet")
+        # the probe sees the footer-inference job of an undeclared read ...
+        assert jobs_of(lambda: spark.read.parquet(path), "pages-inferred")
+        # ... and none from load_pages
+        assert jobs_of(lambda: load_pages(spark, corpus_001), "pages-declared") == []
+
+
 class TestNullSafety:
     def test_null_rows_never_vanish(self, spark):
         rows = [
